@@ -717,8 +717,10 @@ def corpus_filter_full(docs: DataFrame, quality_min: float = 0.5,
     on the smallest possible survivor set. Per-stage shapes are each
     operator's own (no all-pairs anywhere): fingerprint groupBy with
     map-side partials, band-key equi-join, candidate-only exact-Jaccard
-    verify, component propagation over the (tiny) verified-pair edge list,
-    broadcastable keep-list join back onto the survivors.
+    verify, connected components over the (tiny) verified-pair edge list
+    on the driver (one Arrow collect, graph.connected_components), and one
+    broadcast join of the label table onto the survivors, whose
+    ``keep`` rows ARE the output — no second join back onto them.
 
     Reference analog: the processor CHAIN itself — receivers feed a linear
     sequence of gates each of which may drop a batch
@@ -745,10 +747,10 @@ def corpus_filter_full(docs: DataFrame, quality_min: float = 0.5,
     # table is one row per DISTINCT fingerprint (corpus-sized at 10^12
     # docs), so the old broadcast(keepers) join was a scale bug; min_by
     # also collapses hot fingerprints map-side before the exchange.
-    # Persist the survivors: three consumers read them (the shingle table,
-    # the keep-list propagation, and the final keep join), and each would
-    # otherwise re-run the full scan + quality/lang/fingerprint scoring.
-    # Caller-released, like `sh` below.
+    # Persist the survivors: two consumers read them (the shingle table
+    # and the keep-list join), and each would otherwise re-run the full
+    # scan + quality/lang/fingerprint scoring. Caller-released, like `sh`
+    # below.
     exact = (
         gated.groupBy("fp")
         .agg(F.min_by(F.struct(id_col, text_col, "lang", "quality"),
@@ -767,10 +769,7 @@ def corpus_filter_full(docs: DataFrame, quality_min: float = 0.5,
                               threshold=jaccard_threshold)
     keep = near_dup_keep_list(exact, pairs.select("id_a", "id_b"),
                               id_col=id_col)
-    return (
-        exact.join(keep.filter(F.col("keep")).select(id_col), id_col)
-        .select(id_col, "lang", "quality")
-    )
+    return keep.filter(F.col("keep")).select(id_col, "lang", "quality")
 
 
 def corpus_filter_full_sql_duck(quality_min: float = 0.5,

@@ -2,173 +2,90 @@
 step between "verified near-dup pairs" (dedup.py) and a dedup keep-list:
 pairs (a,b),(b,c) must collapse to ONE keeper, not two independent drops.
 
-Spark-first shape: iterative min-label propagation entirely in DataFrame
-ops (symmetrized edges → per-node neighbor-min join → least(old, new)),
-plus a pointer-doubling shortcut hop per round (comp(u) ← comp(comp(u)))
-— the star-contraction-class accelerant (cf. Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14): O(log diameter) rounds
-instead of O(diameter), two shuffles per round, a cheap count() action as
-the fixed-point test. Near-dup graphs have tiny components (pairs/triples)
-so 2-3 rounds suffice either way; the shortcut is what keeps adversarially
-long candidate chains (tests pin a 200-node path) inside the round budget.
+Shape: the verified-pair edge list is small by the near-dup assumption,
+so it crosses to the driver ONCE as Arrow (``edges.toArrow()``), a numpy
+kernel labels every node with its component's min id (min-label hooking
+plus a pointer-doubling hop per round — O(log n) rounds in practice, cf.
+Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC'14), and the label table comes back as an Arrow-built local
+relation that the corpus-sized side broadcast-joins. One Spark job for
+the edges instead of several joins, a groupBy and a fixed-point count
+per propagation round.
 
-The DuckDB oracle (tests/test_graph_components.py) computes the same
-fixed point via a recursive CTE, so the per-node component labels are
-value-verified cross-engine.
+The DuckDB oracle (components_sql_duck) computes the same fixed point via
+a recursive CTE, so the per-node component labels are value-verified
+cross-engine.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
-def _reliable_result(df: DataFrame) -> DataFrame:
-    """Snapshot an iterative operator's FINAL table to a reliable
-    checkpoint and return the file-backed DataFrame.
+def label_components(src: np.ndarray,
+                     dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, comp) for the undirected graph with edges src[i]—dst[i]:
+    ``ids`` are the distinct node ids ascending, ``comp[i]`` the min id
+    reachable from ``ids[i]``. Spark-free, no Python loop over edges.
 
-    Why not ``persist()`` atop the last localCheckpoint: the persisted
-    copy's lineage still points at the checkpoint blocks, so the repo's
-    caller-owned release (``clearCache`` between queries) leaves a
-    DataFrame that recomputes through freed blocks —
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the next action (observed when
-    a module-scoped fixture outlived a per-test clearCache). A reliable
-    checkpoint is immune: result rows live as files under the checkpoint
-    dir (local tmp here; HDFS/object store on a real cluster), occupy
-    zero block-manager storage (getPersistentRDDs stays empty), survive
-    clearCache, and every re-action re-reads the files. Spark itself
-    never deletes reliable-checkpoint files (not even at context stop,
-    unless spark.cleaner.referenceTracking.cleanCheckpoints is on), so a
-    dir THIS module created is removed by an atexit hook — without it,
-    repeated bench/pytest runs would accumulate unbounded /tmp copies.
-    Size per checkpoint is one result-table, operator-bounded, never
-    corpus-bounded.
-    """
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-        sc.setCheckpointDir(d)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return df.checkpoint(eager=True)
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free the executor storage behind a localCheckpoint'ed DataFrame.
-
-    ``DataFrame.unpersist`` only consults the cache manager, which never
-    saw a localCheckpoint; the storage is pinned by the LogicalRDD in the
-    analyzed plan, so release it through that handle. Best-effort — a
-    plan-shape change across Spark versions degrades to waiting for the
-    ContextCleaner's GC-driven unpersist rather than failing the job.
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+    Ids are densified with ``np.unique`` (ascending, so the min dense
+    index IS the min id). Each round hooks, for every edge in both
+    directions, the LABEL of one end onto the other end's label when that
+    is smaller (``np.minimum.at``), then hops once through the label table
+    (lab ← lab[lab]). Labels only ever decrease, stay ≤ the node's own id
+    and inside its component; at the fixed point every label is a root
+    and both ends of every edge share it — the component's min. Hooking
+    labels rather than nodes merges whole trees per round, so rounds grow
+    with log(size), not with the id order along a chain: 9 for the
+    200-node path, 16 for a 200,000-node path in random id order (where
+    hooking nodes instead needs thousands)."""
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    a, b = inv[:len(src)], inv[len(src):]
+    lab = np.arange(len(ids))
+    while True:
+        la, lb = lab[a], lab[b]
+        new = lab.copy()
+        np.minimum.at(new, la, lb)
+        np.minimum.at(new, lb, la)
+        new = new[new]
+        if np.array_equal(new, lab):
+            return ids, ids[lab]
+        lab = new
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
-                         dst: str = "id_b", max_iter: int = 25,
-                         shortcut: bool = True) -> DataFrame:
+                         dst: str = "id_b") -> DataFrame:
     """(id, comp) for every node in ``edges``; comp = MIN node id reachable.
 
-    Two shuffles per round: (1) neighbor-min propagation (groupBy on src),
-    (2) with ``shortcut=True`` (default), a pointer-doubling hop —
-    comp(u) ← comp(comp(u)) — the star-contraction-class accelerant: a
-    label chain of length d collapses in O(log d) rounds instead of O(d),
-    so even adversarially deep near-dup graphs (long chains from
-    transitive candidate pairs) converge well inside ``max_iter``. The
-    shortcut join is always label-table-sized — comp values are node ids
-    by invariant (the min of ids CONNECTED to u, preserved by both steps).
-    ``shortcut=False`` keeps the one-shuffle-per-round pure propagation
-    (the fixture-scale default until round 2).
+    Shape at scale: ONE Spark job collects the edge list to the driver as
+    Arrow, ``label_components`` runs there, and the result is an
+    Arrow-built local relation (no job; broadcastable by every consumer).
+    The driver holds 16 B per edge (two int64 ids) plus a few int64
+    arrays per node — the same bound near_dup_keep_list's broadcast and
+    similarity.semdedup's ``broadcast(dup_map)`` already accept. Measured
+    traffic: 7–15 verified pairs per 1,200-doc perfbench sample, 201 over
+    the whole sf0.1 documents table, 2,772–3,023 at sf1
+    (dedup.minhash_candidates docstring) — kilobytes. A corpus whose
+    verified-pair list outgrows driver memory has a broken candidate
+    generator, not a components problem. Edges with a null end are
+    dropped (a null is no node).
 
-    Iterative lineage is truncated per round with ``localCheckpoint`` —
-    without it the shortcut's self-join doubles the logical plan every
-    round and plan analysis alone OOMs the driver by round ~8 (measured;
-    the same reason GraphFrames checkpoints its CC iterations). Each
-    round's checkpoint storage is released once the next round is
-    materialized, so memory stays one label-table wide; the returned
-    DataFrame is a file-backed reliable-checkpoint snapshot (see
-    ``_reliable_result`` — survives caller clearCache, zero
-    block-manager storage, no lingering checkpoint RDDs). On a real
-    cluster, flip the per-iteration localCheckpoints to reliable
-    ``checkpoint()`` too if executor loss mid-iteration must be
-    survivable — localCheckpoint trades that for zero-config local use.
-
-    Raises if the fixed point isn't reached in ``max_iter`` rounds (with
-    shortcutting that means a component deeper than ~2^max_iter — the
-    candidate generator is broken; fail loudly, don't ship half-merged
-    components).
+    Nothing is persisted or checkpointed: the label table is driver-side
+    data, so caller clearCache cannot invalidate it.
     """
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        sym.select(F.col("u").alias("id")).distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint()  # eager: materialize seed, truncate lineage
-    )
-
-    try:
-        for _ in range(max_iter):
-            nbr = (
-                sym.join(labels, sym["v"] == labels["id"])
-                .groupBy(F.col("u").alias("id"))
-                .agg(F.min("comp").alias("nbr_comp"))
-            )
-            new_labels = (
-                labels.join(nbr, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("comp"),
-                        F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
-                )
-            )
-            if shortcut:
-                # comp(u) ← comp(comp(u)): every label hop halves the
-                # remaining chain. comp is a node id (invariant above), so
-                # the self-join always resolves; left join + coalesce keeps
-                # roots (comp==id) intact without a special case. Both join
-                # sides re-read the SAME checkpointed labels, so the plan
-                # stays round-constant-sized.
-                hop = new_labels.select(F.col("id").alias("h_id"),
-                                        F.col("comp").alias("h_comp"))
-                new_labels = (
-                    new_labels
-                    .join(hop, new_labels["comp"] == hop["h_id"], "left")
-                    .select("id",
-                            F.coalesce("h_comp", "comp").alias("comp"))
-                )
-            new_labels = new_labels.localCheckpoint()
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.comp") != F.col("o.comp"))
-                .count()
-            )
-            _release_local_checkpoint(labels)
-            labels = new_labels
-            if changed == 0:
-                # file-backed snapshot, NOT persist: see _reliable_result
-                final = _reliable_result(labels.select("id", "comp"))
-                _release_local_checkpoint(labels)
-                return final
-        _release_local_checkpoint(labels)
-    finally:
-        sym.unpersist()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds — "
-        "component diameter exceeds even the pointer-doubling envelope; "
-        "the candidate generator is emitting pathological chains")
+    spark = edges.sparkSession
+    tbl = edges.select(src, dst).dropna().toArrow()
+    ids, comp = label_components(tbl.column(0).to_numpy(),
+                                 tbl.column(1).to_numpy())
+    key = edges.schema[src].dataType
+    schema = StructType([StructField("id", key, False),
+                         StructField("comp", key, False)])
+    return spark.createDataFrame(pa.table({"id": ids, "comp": comp}),
+                                 schema=schema)
 
 
 def components_sql_duck(edges_cte: str) -> str:
@@ -192,29 +109,23 @@ def components_sql_duck(edges_cte: str) -> str:
 
 def near_dup_keep_list(docs: DataFrame, verified_pairs: DataFrame,
                        id_col: str = "doc_id") -> DataFrame:
-    """The full cluster-collapse dedup: every doc keeps a row with its
-    component's keeper (the MIN doc id in its near-dup cluster; singleton
-    docs keep themselves). Downstream filters `keep = true` — exactly one
-    survivor per cluster no matter how many pairwise edges the cluster has.
+    """The full cluster-collapse dedup: every row of ``docs`` (all its
+    columns) plus its component's ``keeper`` (the MIN doc id in its
+    near-dup cluster; singleton docs keep themselves) and ``keep`` (id ==
+    keeper). Downstream filters `keep = true` — exactly one survivor per
+    cluster no matter how many pairwise edges the cluster has.
 
     Shape at scale: components run over the (small) verified-pair edge
-    list only; the corpus-sized side is a single left join against the
-    label table — broadcastable whenever near-dups are a small corpus
-    fraction (the normal case).
-
-    Storage lifecycle: the label table the result consumes is a
-    FILE-BACKED reliable checkpoint (_reliable_result), not a persisted
-    table — it occupies zero block-manager storage, survives clearCache
-    by design, and its files are reclaimed by the checkpoint-dir atexit
-    hook (nothing for registry.release_caches to free here).
+    list on the driver (connected_components); the corpus-sized side is
+    one left join against the broadcast label table — no shuffle of
+    ``docs``. One Spark job for the edges here, plus whatever action the
+    caller runs on the result.
     """
     comp = connected_components(verified_pairs)
     return (
-        docs.select(id_col)
-        .join(comp.withColumnRenamed("id", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("comp", F.col(id_col)).alias("keeper"),
-        )
+        docs.join(F.broadcast(comp.withColumnRenamed("id", id_col)),
+                  id_col, "left")
+        .withColumn("keeper", F.coalesce("comp", F.col(id_col)))
+        .drop("comp")
         .withColumn("keep", F.col(id_col) == F.col("keeper"))
     )

@@ -169,6 +169,54 @@ def host_degrees_sql_duck(edges_sql: str) -> str:
     FROM o FULL OUTER JOIN i ON o.host = i.host"""
 
 
+def _reliable_result(df: DataFrame) -> DataFrame:
+    """Snapshot an iterative operator's FINAL table to a reliable
+    checkpoint and return the file-backed DataFrame.
+
+    Why not ``persist()`` atop the last localCheckpoint: the persisted
+    copy's lineage still points at the checkpoint blocks, so the repo's
+    caller-owned release (``clearCache`` between queries) leaves a
+    DataFrame that recomputes through freed blocks —
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the next action (observed when
+    a module-scoped fixture outlived a per-test clearCache). A reliable
+    checkpoint is immune: result rows live as files under the checkpoint
+    dir (local tmp here; HDFS/object store on a real cluster), occupy
+    zero block-manager storage (getPersistentRDDs stays empty), survive
+    clearCache, and every re-action re-reads the files. Spark itself
+    never deletes reliable-checkpoint files (not even at context stop,
+    unless spark.cleaner.referenceTracking.cleanCheckpoints is on), so a
+    dir THIS module created is removed by an atexit hook — without it,
+    repeated bench/pytest runs would accumulate unbounded /tmp copies.
+    Size per checkpoint is one result-table, operator-bounded, never
+    corpus-bounded.
+    """
+    sc = df.sparkSession.sparkContext
+    if sc.getCheckpointDir() is None:
+        import atexit
+        import shutil
+        import tempfile
+
+        d = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
+        sc.setCheckpointDir(d)
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return df.checkpoint(eager=True)
+
+
+def _release_local_checkpoint(df: DataFrame) -> None:
+    """Free the executor storage behind a localCheckpoint'ed DataFrame.
+
+    ``DataFrame.unpersist`` only consults the cache manager, which never
+    saw a localCheckpoint; the storage is pinned by the LogicalRDD in the
+    analyzed plan, so release it through that handle. Best-effort — a
+    plan-shape change across Spark versions degrades to waiting for the
+    ContextCleaner's GC-driven unpersist rather than failing the job.
+    """
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass
+
+
 def _rank_step(base: DataFrame, edges: DataFrame, r: DataFrame,
                n_df: DataFrame, newr: str, dv: str) -> DataFrame:
     """One un-checkpointed rank iteration — split out so plan-shape tests
@@ -194,14 +242,13 @@ def host_rank(edges: DataFrame, iters: int = 3, unit: int = 1_000_000,
     Hosts = every src or dst; dangling hosts (no out-edges) redistribute
     their mass uniformly each step.
 
-    Checkpoint lifecycle is graph.py's CC recipe exactly: one EAGER
-    localCheckpoint per iteration (each iteration's plan embeds the
-    previous twice — dangling sum + contribution join — so an
+    Checkpoint lifecycle: one EAGER localCheckpoint per iteration (each
+    iteration's plan embeds the previous twice — dangling sum + contribution join — so an
     untruncated logical tree grows 2^iters and Catalyst's
     per-downstream-query ANALYSIS cost with it; measured seconds of
     driver time per consumer at iters=3), the previous round's storage
     released once the next is materialized, and the RETURNED DataFrame
-    is a file-backed reliable-checkpoint snapshot (graph._reliable_result:
+    is a file-backed reliable-checkpoint snapshot (_reliable_result:
     survives caller clearCache, zero block-manager storage, so
     test_registry_smoke's zero-persistent-RDD assert holds). On a real
     cluster the same recipe holds with the checkpoint dir on HDFS; flip
@@ -222,11 +269,9 @@ def host_rank(edges: DataFrame, iters: int = 3, unit: int = 1_000_000,
     n_df = base.agg(F.count(F.lit(1)).cast("bigint").alias("n_hosts"))
     newr = _new_rank_expr("spark", num, den, unit)
 
-    from .graph import _release_local_checkpoint, _reliable_result
-
     r = (base.select("host", "out_deg",
                      F.lit(unit).cast("bigint").alias("r"))
-         .localCheckpoint())  # eager seed, like CC's label seed
+         .localCheckpoint())  # eager seed
     for _ in range(iters):
         new_r = _rank_step(base, edges, r, n_df, newr, dv).localCheckpoint()
         _release_local_checkpoint(r)

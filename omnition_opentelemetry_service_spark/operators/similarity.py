@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import hashlib
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -355,10 +356,10 @@ def embedding_dedup_keep(emb: DataFrame, threshold: float = 0.4,
     (vec_id, keeper, keep) for every corpus vector; filter `keep`.
 
     Shape at scale: every stage is its own documented shape (bank equi-join,
-    candidate-only verify, components over the tiny edge list, one left
-    join back) — no all-pairs product anywhere. Caller releases the
-    component-label cache (registry.release_caches / clearCache), same
-    contract as near_dup_keep_list."""
+    candidate-only verify, components on the driver over one Arrow collect
+    of the tiny edge list, one broadcast left join back) — no all-pairs
+    product anywhere. The label table is driver-built: nothing to
+    release."""
     from .graph import near_dup_keep_list
 
     pairs = near_dup_pairs_lsh_banked(emb, threshold, n_banks, n_planes, dim)
@@ -603,9 +604,10 @@ def semdedup_keep(emb: DataFrame,
     broadcast equi-join on cell (k rows); the candidate pair join is an
     EQUI-join on cell — pairwise cost is bounded by the max cell size,
     and k is sized so N/k keeps cells pair-joinable (the paper runs 50k
-    clusters over LAION — same device); components run over the verified
-    edge list only (small by the near-dup assumption); the keeper map
-    joins back broadcast-sized. No all-pairs product anywhere.
+    clusters over LAION — same device); components run on the driver over
+    one Arrow collect of the verified edge list (small by the near-dup
+    assumption; graph.connected_components states the bound); the keeper
+    map joins back broadcast-sized. No all-pairs product anywhere.
 
     The assigned table is PERSISTED before the self-join (projection
     collapse would inline the k-centroid argmax into both sides);
@@ -639,9 +641,8 @@ def semdedup_keep(emb: DataFrame,
     comp = connected_components(edges)
     # keeper per component: min_by on (cos_cent, vec_id) — an aggregate
     # (map-side combinable), not a window; the dup-labeled side is edge-
-    # list-sized, so the keeper map back onto the corpus is broadcastable
-    # whenever near-dups are a small corpus fraction (near_dup_keep_list's
-    # argument).
+    # list-sized (comp is the driver-built label table), so the keeper map
+    # back onto the corpus is broadcastable.
     labeled = comp.join(assigned.select(F.col("vec_id").alias("id"),
                                         "cos_cent"), "id")
     keepers = labeled.groupBy("comp").agg(
@@ -860,7 +861,8 @@ def choose_ivf_nprobe(emb: DataFrame, n_queries: int = 8, k: int = 5,
         raise ValueError("choose_ivf_nprobe needs target_recall and/or "
                          "max_scan_frac — with neither there is no budget "
                          "to optimize for")
-    we_persisted = not emb.storageLevel.useMemory
+    # any storage level (DISK_ONLY too) means the caller owns that cache
+    we_persisted = emb.storageLevel == StorageLevel.NONE
     if we_persisted:
         emb = emb.persist()
     n_cells = ivf_centroids(emb).count()
@@ -880,6 +882,7 @@ def choose_ivf_nprobe(emb: DataFrame, n_queries: int = 8, k: int = 5,
     try:
         curve: list[dict] = []
         chosen: dict | None = None
+        chosen_r = -1.0  # raw recall of `chosen`; the curve shows it rounded
         met = False
         for np_ in schedule:
             r = recall_at_k(ivf_ann_topk(emb, n_queries, k, nprobe=np_),
@@ -891,8 +894,8 @@ def choose_ivf_nprobe(emb: DataFrame, n_queries: int = 8, k: int = 5,
             if max_scan_frac is not None and f > max_scan_frac:
                 break  # deeper probes only scan more
             if target_recall is not None:
-                if chosen is None or point["recall"] > chosen["recall"]:
-                    chosen = point  # best under cap so far
+                if r > chosen_r:
+                    chosen, chosen_r = point, r  # best under cap so far
                 if r >= target_recall:
                     met = True
                     break

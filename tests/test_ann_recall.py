@@ -239,3 +239,36 @@ def test_choose_nprobe_full_depth_reaches_exact(emb):
 def test_choose_nprobe_requires_a_budget(emb):
     with pytest.raises(ValueError, match="budget"):
         sim.choose_ivf_nprobe(emb, n_queries=NQ, k=K)
+
+
+def test_choose_nprobe_leaves_a_disk_only_caller_cache(spark):
+    """A corpus the CALLER persisted belongs to the caller whatever its
+    storage level: a DISK_ONLY cache must still be there afterwards. (The
+    filter gives it a plan of its own: the cache manager would otherwise
+    match the module's MEMORY_AND_DISK `emb` cache.)"""
+    from pyspark import StorageLevel
+
+    df = (load(spark, SF_DIR, "embeddings").filter("vec_id >= 0")
+          .persist(StorageLevel.DISK_ONLY))
+    df.count()
+    try:
+        sim.choose_ivf_nprobe(df, n_queries=NQ, k=K, target_recall=0.0,
+                              max_nprobe=1)
+        assert df.storageLevel == StorageLevel.DISK_ONLY
+    finally:
+        df.unpersist()
+
+
+def test_choose_nprobe_compares_raw_recall(planted, monkeypatch):
+    """The point that meets the target is the one returned, even when its
+    recall rounds (3 decimals) to the same value as a weaker earlier
+    point's: 0.8996 and 0.9001 both print as 0.9, only the second meets
+    a 0.9 target."""
+    raw = iter([0.8996, 0.9001])
+    monkeypatch.setattr(sim, "ivf_ann_topk", lambda *a, **kw: None)
+    monkeypatch.setattr(sim, "recall_at_k", lambda *a: next(raw))
+    monkeypatch.setattr(sim, "ivf_candidate_fraction", lambda *a, **kw: 0.5)
+    out = sim.choose_ivf_nprobe(planted, n_queries=NQ, k=K,
+                                target_recall=0.9)
+    assert [p["nprobe"] for p in out["curve"]] == [1, 2]
+    assert out["met"] and out["nprobe"] == 2

@@ -127,3 +127,24 @@ def test_generation_is_deterministic(spark, dst, tmp_path):
     b = sorted(tuple(r) for r in
                spark.read.parquet(f"{out2}/documents.parquet").collect())
     assert a == b
+
+
+def test_key_offset_refuses_an_overflowing_key(spark):
+    """A 32-bit key whose offset value no longer fits its column must fail
+    loudly, never wrap into a colliding key — also with ANSI mode off,
+    where a plain cast wraps silently. Keys that fit keep their dtype."""
+    df = spark.createDataFrame([(7,), (None,), (2_000_000_000,)],
+                               "c_custkey int")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        out = gen_sf._one_copy(df, "customer", 1, {"customer": 10**9})
+        assert dict(out.dtypes)["c_custkey"] == "int"
+        with pytest.raises(Exception, match="does not fit"):
+            out.collect()
+        fits = gen_sf._one_copy(df.filter("c_custkey < 100 OR c_custkey "
+                                          "IS NULL"), "customer", 1,
+                                {"customer": 10**9})
+        assert sorted(fits.collect(), key=str) == [(1_000_000_007,), (None,)]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)

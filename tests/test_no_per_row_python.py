@@ -14,8 +14,8 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 
 # `.rdd` (property, no parens) is the Python-side row-at-a-time escape hatch
 # being banned; `.rdd()` WITH parens is a py4j call on a JVM plan node
-# (graph.py releases localCheckpoint storage through it) — JVM-side, no rows
-# cross into Python, so the lookahead exempts it.
+# (linkgraph.py releases localCheckpoint storage through it) — JVM-side, no
+# rows cross into Python, so the lookahead exempts it.
 ROW_UDF = re.compile(r"(?<![\w.])udf\s*\(|F\.udf\b|@udf\b|\.rdd\b(?!\()|spark_partition_id\(\).*collect")
 COLLECT_LOOP = re.compile(r"for\s+\w+\s+in\s+\w+\.collect\(\)")
 

@@ -112,8 +112,20 @@ def _rot_text(col: F.Column, c: int) -> F.Column:
 def _one_copy(df: DataFrame, table: str, c: int,
               offs: dict[str, int]) -> DataFrame:
     for col, ent in KEYED.get(table, {}).items():
-        df = df.withColumn(col, (F.col(col) + F.lit(c * offs[ent])
-                                 ).cast(dict(df.dtypes)[col]))
+        # offset in long, then refuse (per row, inside the same scan) a key
+        # its own column type cannot hold: a narrowing cast would wrap it
+        # into another copy's key range with ANSI mode off
+        dtype = dict(df.dtypes)[col]
+        key = F.col(col).cast("long") + F.lit(c * offs[ent])
+        bits = {"tinyint": 8, "smallint": 16, "int": 32}.get(dtype)
+        if bits:
+            key = F.when(
+                ~key.between(-(2 ** (bits - 1)), 2 ** (bits - 1) - 1),
+                F.raise_error(F.lit(
+                    f"gen_sf: {table}.{col} + {c * offs[ent]} does not fit "
+                    f"{dtype}"))
+            ).otherwise(key)  # a NULL key stays NULL
+        df = df.withColumn(col, key.cast(dtype))
     if table == "documents":
         df = df.withColumn("text", _rot_text(F.col("text"), c))
     if table == "embeddings" and c > 0:
