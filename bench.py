@@ -68,7 +68,6 @@ HEADLINE = [
     "sink_translated",
     "logging_sink_sample",
     "parse_extract",
-    "parse_extract_pandas",
     "carry_forward",
     "source_counts_salted",
     "enrich_attrs",

@@ -7,18 +7,14 @@ a raw log line into typed columns, with a quarantine path for malformed rows
 (the protocol-violation analog, octrace/opencensus.go:119-121: bad first
 message → error + dropped-span counters, never a crash).
 
-Two implementations with identical output schemas:
-
-- ``parse_payload_native``  — ``regexp_extract`` built-ins; stays inside
-  whole-stage codegen, zero Python. Default hot path.
-- ``parse_payload_pandas``  — Arrow-batched ``pd.Series.str.extract`` inside
-  ``mapInPandas``; the pluggable-grok path for patterns that need Python
-  regex features. No per-row Python either way (input_hint).
+One serving parse, ``parse_payload_split``: one validity regex, then
+positional token extraction — JVM-side, inside whole-stage codegen, no
+Python. ``parse_payload_native`` (one ``regexp_extract`` per field) is the
+reference the tests compare it against, row for row; no serving module
+calls it.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,8 +33,6 @@ PAYLOAD_GROK = (
     "%{TIMESTAMP_ISO8601:ts} host=%{WORD:host} lvl=%{WORD:lvl} "
     'src=%{WORD:src} n=%{INT:n} trace=%{HEX32:trace} msg="%{QUOTED:msg}"'
 )
-
-PARSED_FIELDS = ["ts_str", "host", "lvl", "src", "n_tok", "trace_hex", "msg"]
 
 
 def grok_to_regex(grok: str) -> tuple[str, list[str]]:
@@ -59,16 +53,12 @@ def grok_to_regex(grok: str) -> tuple[str, list[str]]:
 
 PAYLOAD_REGEX, _PAYLOAD_FIELDS = grok_to_regex(PAYLOAD_GROK)
 
-PARSED_SCHEMA = (
-    "doc_id string, stream_id int, msg_seq int, node_host string, "
-    "ts_str string, host string, lvl string, src string, n_tok int, "
-    "trace_hex string, msg string, valid boolean"
-)
-
 
 def parse_payload_native(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """JVM-side regexp_extract parse. Malformed rows get valid=false and NULL
-    fields (quarantine filter happens downstream so drops can be counted)."""
+    """Per-field regexp_extract parse — the test-side reference for
+    parse_payload_split (row-identical on every input string; pytest +
+    hypothesis). Malformed rows get valid=false and NULL fields (quarantine
+    filter happens downstream so drops can be counted)."""
     p = F.col(payload_col)
     groups = {name: F.regexp_extract(p, PAYLOAD_REGEX, i + 1)
               for i, name in enumerate(_PAYLOAD_FIELDS)}
@@ -88,43 +78,8 @@ def parse_payload_native(df: DataFrame, payload_col: str = "payload") -> DataFra
     return out.withColumn("valid", valid).drop(payload_col)
 
 
-def parse_payload_pandas(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-vectorized pandas parse (pd.Series.str.extract — one C-level
-    regex pass per batch, no per-row Python)."""
-    import pandas as pd  # noqa: F401  (imported on executors)
-
-    passthrough = [c for c in df.columns if c != payload_col]
-    regex = PAYLOAD_REGEX
-
-    def parse_batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import re
-
-        import pandas as pd
-
-        # re.ASCII: Python's \w/\d are UNICODE by default while Java's (the
-        # native/split impls) and RE2's (the DuckDB oracle) are ASCII — a
-        # payload like host=héllo must be INVALID in every impl, not valid
-        # here and quarantined there.
-        rx = re.compile(regex, re.ASCII)
-
-        for pdf in it:
-            ext = pdf[payload_col].str.extract(rx)
-            out = pdf[passthrough].copy()
-            out["ts_str"] = ext[0]
-            out["host"] = ext[1]
-            out["lvl"] = ext[2]
-            out["src"] = ext[3]
-            out["n_tok"] = ext[4].astype("Int32")  # nullable int, no upcast
-            out["trace_hex"] = ext[5]
-            out["msg"] = ext[6]
-            out["valid"] = ext[0].notna()
-            yield out
-
-    return df.mapInPandas(parse_batches, schema=PARSED_SCHEMA)
-
-
 def parse_payload_split(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Structural fast-path parse: ONE validity regex + positional token
+    """The serving parse: ONE validity regex + positional token
     extraction. Output is row-identical to parse_payload_native (pytest +
     the pipeline oracle assert it), ~2.6× faster (measured single-core on
     4M rows: 69.5s regex vs 26.6s split) because the regex engine runs once

@@ -42,19 +42,11 @@ TOKEN_GROUP_NAMES = ("_tg_h1", "_tg_h2", "_tg_len")
 
 def tokens_checksum(col: str | Column = "tokens") -> Column:
     """Order-sensitive polynomial checksum of the token array, JVM-side via
-    ``aggregate``: acc = (acc*31 + tok) mod M (M < 2^57 so acc*31+t stays < 2^63 under ANSI arithmetic). DuckDB parity:
-    list_reduce with the same arithmetic."""
+    ``aggregate``: acc = (acc*31 + tok) mod M (M < 2^57 so acc*31+t stays < 2^63 under ANSI arithmetic). The tests
+    pin it against the same fold in Python."""
     c = F.col(col) if isinstance(col, str) else col
     return F.aggregate(
         c,
         F.lit(7).cast("long"),
         lambda acc, t: (acc * 31 + t.cast("long")) % F.lit(144115188075855859),
     ).alias("tokens_checksum")
-
-
-def tokens_checksum_sql_duck(col: str = "tokens") -> str:
-    return (
-        f"list_reduce(list_prepend(CAST(7 AS BIGINT), "
-        f"list_transform({col}, t -> CAST(t AS BIGINT))), "
-        f"(acc, t) -> (acc * 31 + t) % 144115188075855859)"
-    )

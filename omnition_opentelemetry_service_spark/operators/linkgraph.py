@@ -97,12 +97,6 @@ def extract_links(pages: DataFrame, html_col: str = "html",
         .alias("href"))
 
 
-def extract_links_sql_duck(pages_sql: str, html_col: str = "html",
-                           id_col: str = "doc_id") -> str:
-    return (f"SELECT {id_col}, unnest(regexp_extract_all({html_col}, "
-            f"'{LINK_RX}', 1)) AS href FROM ({pages_sql}) pg")
-
-
 _EDGE_PRED = ("src_host IS NOT NULL AND src_host <> '' AND "
               "dst_host IS NOT NULL AND dst_host <> '' AND "
               "src_host <> dst_host")

@@ -59,11 +59,6 @@ def mix_hash(col: str, salt: str) -> F.Column:
     return F.expr(_H_SPARK.format(col=col, salt=salt))
 
 
-def mix_hash_sql_duck(col: str, salt: str) -> str:
-    _check_literal(salt, "salt")
-    return _H_DUCK.format(col=col, salt=salt)
-
-
 # Wide variant for ORDERING (shuffle_ord): 12 md5 hex chars → uniform on
 # [0, 2^48), exact in int64 in both engines. The mod-1e6 hash is right for
 # FRACTION decisions (split/epoch) but wrong as a sort key at corpus scale:

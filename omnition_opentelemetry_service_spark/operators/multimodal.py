@@ -232,7 +232,12 @@ def extract_real_media_features(media: DataFrame) -> DataFrame:
     """Genuine decode + per-modality features per Arrow batch; image rows
     fill (width, height, mean_lum), audio rows fill (n_samples, sample_rate,
     rms, zero_crossings), the other modality's columns stay NULL. Unknown
-    media types raise — the honest contract, not a silent NULL row."""
+    media types raise — the honest contract, not a silent NULL row.
+
+    Video rows: ``duration_s`` is authoritative. For an AVI, ``timescale``
+    is only the fps rounded to an int label (an NTSC 30000/1001 file reads
+    30), so n_frames / timescale is NOT its duration; use ``duration_s``,
+    which is computed from the exact rational rate."""
 
     def feats(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import hashlib

@@ -139,8 +139,6 @@ def compile_spec(raw: dict) -> list[JobSpec]:
             cfg.sf_dir = first_recv.get("sf_dir")
         for p in p_processors:
             pc = processors[p] or {}
-            if "impl" in pc:
-                cfg.parse_impl = pc["impl"]
             if "salt_buckets" in pc:
                 cfg.salt_buckets = pc["salt_buckets"]
             if "num_partitions" in pc:

@@ -34,7 +34,6 @@ from ..sinks.snapshot import SnapshotTable
 
 # Config validation sentinels (pattern: exact error strings,
 # memorylimiter.go:39-49 / config golden tests SURVEY.md §5.1-5.2).
-ERR_BAD_PARSE_IMPL = "parse_impl must be one of: split, native, pandas"
 ERR_NO_INPUT = "either n_rows or sf_dir must be set"
 ERR_BAD_SALT = "salt_buckets must be >= 0"
 
@@ -48,10 +47,6 @@ class PipelineConfig:
     # not N jobs; the reference's receivers-union semantics)
     input_dir: str | list[str] | None = None
     input_db: str | None = None  # bucketed catalog tables (<db>.payloads/...)
-    # "split" = structural fast path (1 validity regex + positional tokens),
-    # row-identical to "native" (pytest + oracle) and ~2.6× faster — the
-    # pipeline default; "native" = per-field regex; "pandas" = Arrow UDF.
-    parse_impl: str = "split"
     salt_buckets: int = 32
     checkpoint_dir: str | None = None
     write_sinks_dir: str | None = None
@@ -59,8 +54,6 @@ class PipelineConfig:
     sinks: list[str] = field(default_factory=list)
 
     def validate(self) -> None:
-        if self.parse_impl not in ("split", "native", "pandas"):
-            raise ValueError(ERR_BAD_PARSE_IMPL)
         if (self.n_rows is None and self.sf_dir is None
                 and self.input_dir is None and self.input_db is None):
             raise ValueError(ERR_NO_INPUT)
@@ -84,14 +77,14 @@ class PipelineConfig:
 
 
 def config_fingerprint(cfg: PipelineConfig) -> str:
-    """Identity of a pipeline's INPUT + parse semantics. A committed snapshot
-    is only resumable under the same fingerprint — re-running with the same
-    checkpoint_dir but different n_rows/input/parse_impl must rebuild, not
-    silently join stale snapshot data against fresh inputs."""
+    """Identity of a pipeline's INPUT. A committed snapshot is only
+    resumable under the same fingerprint — re-running with the same
+    checkpoint_dir but different n_rows/input must rebuild, not silently
+    join stale snapshot data against fresh inputs."""
     import hashlib
 
     key = "|".join(str(x) for x in (
-        cfg.n_rows, cfg.sf_dir, cfg.input_dir, cfg.input_db, cfg.parse_impl))
+        cfg.n_rows, cfg.sf_dir, cfg.input_dir, cfg.input_db))
     return hashlib.md5(key.encode()).hexdigest()
 
 
@@ -144,10 +137,7 @@ def build_routed(spark: SparkSession, cfg: PipelineConfig,
     dim = fixtures.source_dim(spark)
     rules = fixtures.route_rules(spark)
 
-    parse = {"split": parse_fns.parse_payload_split,
-             "native": parse_fns.parse_payload_native,
-             "pandas": parse_fns.parse_payload_pandas}[cfg.parse_impl]
-    parsed = parse(payloads)
+    parsed = parse_fns.parse_payload_split(payloads)
     if counters is not None:
         parsed = counters.observe_stage(
             parsed, "parse", "oc_trace", drop_predicate=~F.col("valid"))

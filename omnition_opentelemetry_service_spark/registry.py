@@ -173,19 +173,13 @@ def q_media_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_parse_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    parsed = parse_fns.parse_payload_native(fx.raw_payloads(spark, _n(sf_dir)))
-    return parsed.select("doc_id", "stream_id", "msg_seq", "ts_str", "host",
-                         "lvl", "src", "n_tok", "trace_hex", "msg", "valid")
-
-
-def q_parse_extract_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    parsed = parse_fns.parse_payload_pandas(fx.raw_payloads(spark, _n(sf_dir)))
+    parsed = parse_fns.parse_payload_split(fx.raw_payloads(spark, _n(sf_dir)))
     return parsed.select("doc_id", "stream_id", "msg_seq", "ts_str", "host",
                          "lvl", "src", "n_tok", "trace_hex", "msg", "valid")
 
 
 def q_parse_quarantine_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    parsed = parse_fns.parse_payload_native(fx.raw_payloads(spark, _n(sf_dir)))
+    parsed = parse_fns.parse_payload_split(fx.raw_payloads(spark, _n(sf_dir)))
     return parsed.agg(
         F.lit("oc_trace").alias("tag"),
         F.count(F.lit(1)).alias("received"),
@@ -196,7 +190,7 @@ def q_parse_quarantine_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_quarantined_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level quarantine view (driver slot goes to the aggregate form,
     parse_quarantine_counts; this one is pytest-covered)."""
-    parsed = parse_fns.parse_payload_native(fx.raw_payloads(spark, _n(sf_dir)))
+    parsed = parse_fns.parse_payload_split(fx.raw_payloads(spark, _n(sf_dir)))
     return parsed.filter(~F.col("valid")).select("doc_id", "stream_id", "msg_seq")
 
 
@@ -261,7 +255,7 @@ def q_union_multi_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested Zipkin-v2 branch, and the Jaeger-JSON branch (process.serviceName
     + tags-as-array-of-structs)."""
     n = _n(sf_dir)
-    grok = parse_fns.parse_payload_native(fx.raw_payloads(spark, n)) \
+    grok = parse_fns.parse_payload_split(fx.raw_payloads(spark, n)) \
         .filter(F.col("valid")).select("doc_id", "src", "n_tok")
     js = parse_fns.parse_json_gateway(fx.raw_json_payloads(spark, n)) \
         .filter(F.col("valid")).select("doc_id", "src", "n_tok")
@@ -276,7 +270,7 @@ def q_union_multi_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_truncate_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    parsed = parse_fns.parse_payload_native(fx.raw_payloads(spark, _n(sf_dir)))
+    parsed = parse_fns.parse_payload_split(fx.raw_payloads(spark, _n(sf_dir)))
     good = parsed.filter(F.col("valid"))
     return good.select(
         "doc_id", *caps.truncatable("msg", 8))
@@ -306,7 +300,7 @@ def q_trace_id_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     gateway carries base64 ids, the wire carries 16-byte binary
     (opencensus_test.go:80-81,134). Round-trip hex → binary → base64 and
     back — all JVM-side codecs."""
-    parsed = parse_fns.parse_payload_native(fx.raw_payloads(spark, _n(sf_dir)))
+    parsed = parse_fns.parse_payload_split(fx.raw_payloads(spark, _n(sf_dir)))
     good = parsed.filter(F.col("valid"))
     b = F.unhex(F.col("trace_hex"))
     return good.select(
@@ -454,8 +448,9 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized numpy signature path (dedup.minhash_signatures_pandas):
-    # one-pass map (zero-shuffle at scale; the pure-JVM grouped explode
-    # stays as the parity twin, pytest- and hypothesis-pinned). Widen the
+    # one-pass map (zero-shuffle at scale; the pure-JVM fold
+    # minhash_signature_expr is the parity twin, pytest- and
+    # hypothesis-pinned). Widen the
     # RAW docs before the shingle projection: if the scan is narrow the
     # exchange then moves text bytes, not the ~5× shingle arrays the
     # projection would otherwise materialize pre-shuffle (measured 1.6×
@@ -761,7 +756,6 @@ def _main_oracle_sql() -> dict[str, str]:
     SELECT doc_id, stream_id, msg_seq, ts_str, host, lvl, src, n_tok,
            trace_hex, msg, valid
     FROM parsed"""
-    o["parse_extract_pandas"] = o["parse_extract"]
 
     o["parse_quarantine_counts"] = f"""{pre}
     SELECT 'oc_trace' AS tag, CAST(count(*) AS BIGINT) AS received,
@@ -2156,7 +2150,6 @@ def _main_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_length_quantiles": q_token_length_quantiles,
         "media_chunks": q_media_chunks,
         "parse_extract": q_parse_extract,
-        "parse_extract_pandas": q_parse_extract_pandas,
         "parse_quarantine_counts": q_parse_quarantine_counts,
         "carry_forward": q_carry_forward,
         "carry_forward_scalable": q_carry_forward_scalable,
@@ -2221,7 +2214,10 @@ _PROMOTED = ["warc_docs", "robots_docs", "frontier_sched",
              # the chained form composes) and embedding_near_dup_lsh
              # (family keeps embedding_near_dup + ann_lsh_topk covers the
              # LSH path); both keep the identical gate via extras.
-             "assembled_packs", "fim_docs"]
+             "assembled_packs", "fim_docs",
+             # the band-bucket-capped serving form of the MinHash dedup
+             # (its uncapped, exact-complete twin keeps its own slot)
+             "minhash_dedup_verified_capped"]
 _DEMOTED = ["carry_forward", "events_json_extract", "simhash_values",
             "lsh_bucket_sizes", "ngram_jaccard_pairs",
             "attrs_transform", "embedding_near_dup_lsh"]

@@ -1,14 +1,11 @@
-"""Table loaders for the driver-generated testdata plus per-format parse
-branches. Multiple receivers feeding one pipeline = unionByName of parse
-branches (reference: pipeline YAML lists several receivers,
-receiver/opencensusreceiver/testdata/config.yaml:24-28)."""
+"""Table loaders for the driver-generated testdata (one parquet file per
+table under an sf directory)."""
 
 from __future__ import annotations
 
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -18,17 +15,3 @@ TABLES = [
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def events_json_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTTP/JSON gateway analog (opencensusreceiver/opencensus.go:261-268):
-    parse the JSON `props` column into typed fields. get_json_object is
-    JVM-side; no Python in the path."""
-    ev = load(spark, sf_dir, "events")
-    return ev.withColumn(
-        "k", F.get_json_object("props", "$.k").cast("int")
-    )

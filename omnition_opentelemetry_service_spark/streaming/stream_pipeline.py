@@ -9,7 +9,7 @@ a streaming DAG so the engine covers both execution modes with ONE set of
 stage definitions:
 
     readStream (file source over the token table)
-      → parse (same parse_payload_native expression)
+      → parse (same parse_payload_split expression)
       → enrich (same broadcast dim join — stream-static joins are supported)
       → route  (same broadcast rules theta-join + deterministic sampler)
       → windowed per-sink counts with watermark (batch-interval analog)
@@ -62,7 +62,7 @@ def build_routed_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """
     payloads = read_payload_stream(spark, input_dir)
     seqs = spark.read.parquet(f"{input_dir}/sequences")  # static side
-    parsed = parse_fns.parse_payload_native(payloads)
+    parsed = parse_fns.parse_payload_split(payloads)
     good = parsed.filter(F.col("valid"))
     # node_host_filled = the batch-head Node (no cross-row window on an
     # unbounded stream; per-quantum head carry is the streaming contract) —
@@ -143,7 +143,7 @@ def run_sessions_once(spark: SparkSession, input_dir: str,
 def parsed_span_times(spark: SparkSession, input_dir: str) -> DataFrame:
     """(doc_id, span_time) stream — the receiver-span side of the
     correlation (one row per valid payload)."""
-    parsed = parse_fns.parse_payload_native(
+    parsed = parse_fns.parse_payload_split(
         read_payload_stream(spark, input_dir))
     return parsed.filter(F.col("valid")).select(
         "doc_id",
@@ -155,7 +155,7 @@ def ack_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     deterministically (ack lags the span by hash(doc_id)%30 seconds; an
     independent file source over the same quanta, so the two sides
     genuinely progress as separate streams)."""
-    parsed = parse_fns.parse_payload_native(
+    parsed = parse_fns.parse_payload_split(
         read_payload_stream(spark, input_dir))
     return parsed.filter(F.col("valid")).select(
         "doc_id",

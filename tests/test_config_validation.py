@@ -16,7 +16,6 @@ from omnition_opentelemetry_service_spark.operators.memorylimiter import (
     MemoryLimiterConfig,
 )
 from omnition_opentelemetry_service_spark.plans.pipeline import (
-    ERR_BAD_PARSE_IMPL,
     ERR_BAD_SALT,
     ERR_NO_INPUT,
     PipelineConfig,
@@ -64,7 +63,6 @@ def test_pipeline_config_valid():
 @pytest.mark.parametrize(
     "kwargs,err",
     [
-        (dict(n_rows=10, parse_impl="protobuf"), ERR_BAD_PARSE_IMPL),
         (dict(), ERR_NO_INPUT),
         (dict(n_rows=10, salt_buckets=-1), ERR_BAD_SALT),
     ],

@@ -27,8 +27,8 @@ N = 400
 def test_extras_full_oracle_hash_parity(spark):
     """Every rotated-out slot keeps driver-grade verification: the same
     gate the driver runs, over the full extras pool (rotated-out slots,
-    the e2e twins, and every post-rotation addition — 52 entries as of
-    round 5) at the oracle's pinned sf."""
+    the e2e twins, and every post-rotation addition — 51 entries) at the
+    oracle's pinned sf."""
     extras = registry.build_extra_queries()
     oracles = registry.build_extra_oracle_sql()
     assert set(extras) == set(oracles) == {
@@ -39,8 +39,7 @@ def test_extras_full_oracle_hash_parity(spark):
         "dsir_scores", "dsir_select", "bloom_flags", "drift_topk",
         "drift_grams", "quota_docs", "url_canon", "url_dedup_groups",
         "span_removed", "html_stripped", "hostgate_docs", "c4_docs",
-        "minhash_quality", "minhash_dedup_verified_capped",
-        "normalized_docs", "skew_report", "heavy_keys",
+        "minhash_quality", "normalized_docs", "skew_report", "heavy_keys",
         "warc_docs", "robots_docs", "crawl_delay_hosts", "sitemap_hosts",
         "sitemap_entries", "sitemap_discover",
         "retry_outcomes", "worker_queue_load", "token_contamination",

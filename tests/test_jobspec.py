@@ -23,7 +23,6 @@ def test_golden_config_decodes_fully():
     assert job.exporters == ["sinks"]
     cfg = job.config
     assert cfg.n_rows == 400
-    assert cfg.parse_impl == "native"
     assert cfg.salt_buckets == 16
     assert cfg.write_sinks_dir == "/tmp/spark-graft-sinks"
 

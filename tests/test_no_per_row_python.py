@@ -48,7 +48,7 @@ def test_no_driver_side_collect_loops_in_operators():
 def test_pandas_udfs_only_where_declared():
     """mapInPandas/pandas_udf may appear only in the modules designed around
     Arrow batches."""
-    allowed = {"parse.py", "multimodal.py", "metrics.py", "batcher.py",
+    allowed = {"multimodal.py", "metrics.py", "batcher.py",
                "similarity.py",  # brute_force_topk_pandas: one numpy matmul per Arrow batch
                "dedup.py",  # simhash_signatures_pandas: memoized md5 + numpy votes
                "registry.py",  # registry mentions mapInPandas in comments only

@@ -1,4 +1,4 @@
-"""Parse stage: grok compilation, native vs pandas parity, quarantine
+"""Parse stage: grok compilation, split vs native parity, quarantine
 counting (protocol-violation analog, octrace/opencensus.go:119-121)."""
 
 from __future__ import annotations
@@ -34,18 +34,6 @@ def test_native_parse_extracts_typed_fields(spark):
     bad = [r for r in rows if not r.valid]
     assert len(bad) == EXPECTED_MALFORMED
     assert all(r.n_tok is None and r.ts_str is None for r in bad)
-
-
-def test_pandas_parse_matches_native(spark):
-    """Two implementations, one contract — identical output frames."""
-    payloads = fx.raw_payloads(spark, N)
-    a = p.parse_payload_native(payloads)
-    b = p.parse_payload_pandas(payloads)
-    assert a.columns == b.columns
-    cols = a.columns
-    ra = sorted(tuple(r) for r in a.select(cols).collect())
-    rb = sorted(tuple(r) for r in b.select(cols).collect())
-    assert ra == rb
 
 
 def test_quarantine_split_counts(spark):
@@ -132,9 +120,8 @@ def test_split_parse_adversarial_payloads(spark):
 
 
 def test_parse_impls_agree_on_unicode_payloads(spark):
-    """All three parse impls must mark a unicode-host payload INVALID the
-    same way: Java and RE2 \\w are ASCII; Python's is unicode unless the
-    pandas impl compiles with re.ASCII (regression pin)."""
+    """Both parse impls must mark a unicode-host payload INVALID the same
+    way: Java's \\w and \\d are ASCII, as are RE2's (the DuckDB oracle)."""
     from omnition_opentelemetry_service_spark.functions import parse as pf
 
     rows = [
@@ -149,15 +136,14 @@ def test_parse_impls_agree_on_unicode_payloads(spark):
         [(str(i), p) for i, p in rows], "doc_id string, payload string") \
         .withColumn("stream_id", F.lit(0)).withColumn("msg_seq", F.lit(0)) \
         .withColumn("node_host", F.lit(None).cast("string"))
-    for impl in (pf.parse_payload_native, pf.parse_payload_split,
-                 pf.parse_payload_pandas):
+    for impl in (pf.parse_payload_native, pf.parse_payload_split):
         got = {int(r.doc_id): r.valid for r in impl(df).collect()}
         assert got == {1: False, 2: False, 3: True}, impl.__name__
 
 
-def test_parse_fuzz_four_engines_agree(spark):
+def test_parse_fuzz_three_engines_agree(spark):
     """4000 seeded random payloads (valid / truncated / mutated / garbage /
-    unicode) — native, split, pandas, and the DuckDB oracle form must agree
+    unicode) — native, split, and the DuckDB oracle form must agree
     row-for-row. The durable form of the session fuzz that validated the
     parse family end-to-end."""
     import random
@@ -209,7 +195,6 @@ def test_parse_fuzz_four_engines_agree(spark):
 
     n = grab(pfn.parse_payload_native(df))
     assert n == grab(pfn.parse_payload_split(df))
-    assert n == grab(pfn.parse_payload_pandas(df))
     nv = sum(1 for r in n if r[-1])
     assert 0 < nv < len(n)  # the fuzz produced both populations
 

@@ -39,12 +39,6 @@ def test_parallelism_invariance(spark):
         spark, num_partitions=16)
 
 
-def test_parse_impl_invariance(spark):
-    native = _routed_rows(spark, parse_impl="native")
-    assert native == _routed_rows(spark, parse_impl="pandas")
-    assert native == _routed_rows(spark, parse_impl="split")
-
-
 def test_lineage_totals_match_rowcount(spark):
     res = pl.run_pipeline(spark, pl.PipelineConfig(n_rows=N))
     lineage = {r.stage: r.rows_total for r in res["lineage"].collect()}

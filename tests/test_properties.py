@@ -155,21 +155,29 @@ def test_simhash_pandas_matches_expr_on_arbitrary_text(spark, texts):
 
 @SET
 @given(st.lists(st.text(max_size=60), min_size=1, max_size=15))
-def test_minhash_pandas_matches_grouped_on_arbitrary_text(spark, texts):
-    """Zero-shuffle numpy MinHash == grouped-explode MinHash on arbitrary
-    text (same md5-prefix hash, same affine family; docs with zero shingles
-    are dropped by BOTH forms)."""
+def test_minhash_pandas_matches_fold_on_arbitrary_text(spark, texts):
+    """Zero-shuffle numpy MinHash == the JVM fold minhash_signature_expr on
+    arbitrary text (same md5-prefix hash, same affine family) for every doc
+    with at least one shingle; docs with an empty or NULL shingle array get
+    no pandas row (the fold gives them the all-MH_PRIME identity)."""
     from omnition_opentelemetry_service_spark.functions import text as tx
     from omnition_opentelemetry_service_spark.operators import dedup as dd
 
+    n = len(texts)
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    ).withColumn("shingles", tx.char_shingles("text"))
-    grouped = {r.id: list(r.minhash)
-               for r in dd.minhash_signatures_grouped(df).collect()}
+    ).withColumn("shingles", tx.char_shingles("text")).unionByName(
+        spark.createDataFrame([(n, None, []), (n + 1, None, None)],
+                              "doc_id long, text string, "
+                              "shingles array<string>"))
+    fold = {r.doc_id: (r.n, list(r.minhash or [])) for r in df.select(
+        "doc_id", F.coalesce(F.size("shingles"), F.lit(0)).alias("n"),
+        dd.minhash_signature_expr("shingles").alias("minhash")).collect()}
     pandas_form = {r.id: list(r.minhash)
                    for r in dd.minhash_signatures_pandas(df).collect()}
-    assert grouped == pandas_form
+    assert pandas_form == {i: mh for i, (k, mh) in fold.items() if k > 0}
+    assert fold[n] == (0, [dd.MH_PRIME] * dd.MH_HASHES)
+    assert n not in pandas_form and n + 1 not in pandas_form
 
 
 @SET

@@ -36,8 +36,7 @@ receivers:
     type: fixture_payloads
     n_rows: 200
 processors:
-  parse:
-    impl: native
+  parse: {{}}
 exporters:
   sinks:
     type: parquet
